@@ -31,11 +31,15 @@ Env config (reference names kept where they exist):
   METRICS_HOST   exposition bind address (default 0.0.0.0, as the
                  reference binds — a pod-IP scrape must reach it)
 
-Scale note: stdout NDJSON mirrors the reference's emit
-(``tasks.rs:105``) and streams through ``toLocalIterator`` (one
-partition at a time on the driver — the print point is inherently a
-single process). A cluster deployment passes ``emit=None`` and a
-``sink_dir`` instead, which writes NDJSON from executors.
+Scale note: each micro-batch's plan (spool scan, dedup state store)
+runs once. Stdout NDJSON mirrors the reference's emit
+(``tasks.rs:105``) and streams through ``toLocalIterator`` with
+prefetch (at most two partitions on the driver — the print point is
+inherently a single process); the same loop counts the metric
+increments, so they cost no job of their own. A cluster deployment
+passes ``emit=None`` and a ``sink_dir`` instead: the batch is
+persisted, a label-bounded rollup feeds the metrics, and executors
+write the NDJSON from the cached copy.
 """
 
 from __future__ import annotations
@@ -44,6 +48,7 @@ import logging
 import os
 import signal
 import threading
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -288,36 +293,54 @@ def run_daemon(
         keyed, key_col="k", time_col="time", ttl_seconds=cfg.cache_ttl
     ).observe("kes_emitted", F.count(F.lit(1)).alias("n"))
 
+    label_cols = ("etype", "ereason", "ekind", "ens")
+
     def sink(batch: DataFrame, batch_id: int) -> None:
-        # metrics first (aggregates only reach the driver), then the
-        # NDJSON emit — same per-batch order as the reference's
-        # writer loop (count, print, commit; tasks.rs:95-131)
-        metrics.observe_batch(
-            batch,
-            key_col="k",
-            order_cols=("time",),
-            type_col="etype",
-            reason_col="ereason",
-            kind_col="ekind",
-            namespace_col="ens",
-            defer_totals_batch_id=batch_id,
+        # Each job over `batch` runs its whole plan again (source scan
+        # and dedup state store included), so the batch is consumed
+        # ONCE: the emit loop counts the metrics as it prints (the
+        # reference's writer loop: count, print, commit;
+        # tasks.rs:95-131), and a sink_dir write reads a persisted
+        # copy. dropDuplicatesWithinWatermark leaves each key once per
+        # batch, so every row is a cache miss; the received count is
+        # reconciled from the pre-dedup observation (sync_received).
+        rows = batch.select(
+            F.to_json(F.struct("time", "kubernetes_event")).alias("line"),
+            *label_cols,
+            (F.octet_length("k") + F.lit(8)).alias("nbytes"),
         )
-        lines = batch.select(
-            F.to_json(F.struct("time", "kubernetes_event")).alias("line")
-        )
-        both = emit is not None and sink_dir is not None
-        if both:
-            # don't recompute the batch for the second consumer
-            lines = lines.persist()
+        cached = sink_dir is not None
+        if cached:
+            rows = rows.persist()
+        counts: Counter = Counter()
+        nbytes = 0
         try:
             if emit is not None:
-                for row in lines.toLocalIterator():
-                    emit(row["line"])
+                # prefetch keeps at most two partitions on the driver
+                for line, *lbl, n in rows.toLocalIterator(
+                    prefetchPartitions=True
+                ):
+                    emit(line)
+                    counts[tuple(lbl)] += 1
+                    nbytes += n
+            else:
+                rollup = rows.groupBy(*label_cols).agg(
+                    F.count(F.lit(1)), F.sum("nbytes")
+                )
+                for *lbl, n, b in rollup.collect():
+                    counts[tuple(lbl)] = n
+                    nbytes += b
             if sink_dir is not None:
-                lines.write.mode("append").text(sink_dir)
+                rows.select("line").write.mode("append").text(sink_dir)
         finally:
-            if both:
-                lines.unpersist()
+            if cached:
+                rows.unpersist()
+        metrics.record_batch(
+            [(*lbl, n) for lbl, n in counts.items()],
+            nbytes,
+            sum(counts.values()),
+            defer_totals_batch_id=batch_id,
+        )
 
     writer = (
         deduped.writeStream.foreachBatch(sink)

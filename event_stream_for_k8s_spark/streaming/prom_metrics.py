@@ -17,15 +17,17 @@ metric families (``src/tasks.rs:26-64``):
   {items, bytes}, the cache size (``src/tasks.rs:210-216``).
 
 This module re-expresses that egress Spark-first: a tiny dependency-
-free metric registry (counters/gauges + text exposition rendering), a
-``foreachBatch`` observer that computes the per-batch increments as
-Spark aggregates (label-cardinality-bounded collect — the only rows
-that reach the driver are the per-label-combination counts, never
-events), and a stdlib HTTP endpoint serving ``GET /metrics``. At
-cluster scale the observer's single per-batch aggregation job runs on
-executors and the registry lives on the driver, which is exactly
-where a scrape endpoint must live; for multi-query deployments attach
-one observer per query and serve one registry.
+free metric registry (counters/gauges + text exposition rendering),
+one staging path for a batch's increments (``record_batch``) with two
+ways to feed it, and a stdlib HTTP endpoint serving ``GET /metrics``.
+The feeds: ``observe_batch`` computes the increments as a Spark
+rollup (label-cardinality-bounded collect — the only rows that reach
+the driver are the per-label-combination counts, never events); a
+caller that already walks the batch's rows, like the daemon's NDJSON
+emit loop, counts them in that loop and calls ``record_batch``, so
+the batch's plan runs once. The registry lives on the driver, which
+is exactly where a scrape endpoint must live; for multi-query
+deployments attach one observer per query and serve one registry.
 
 Cache seen-ness here is batch-local (first occurrence of a key inside
 the micro-batch = miss): the CROSS-batch state belongs to the dedup
@@ -244,7 +246,12 @@ class K8sStreamMetrics:
 
         ONE Spark job per batch: a per-key ``min_by`` picks the
         first-occurrence labels, then a per-label-combination rollup
-        — only label-cardinality-bounded rows reach the driver.
+        — only label-cardinality-bounded rows reach the driver. That
+        job runs the batch's whole plan: inside foreachBatch, a second
+        consumer of the batch (an emit or a write) runs it again —
+        source scan and state store included — unless the caller
+        persisted the batch first. A caller that already iterates the
+        rows can count them itself and use :meth:`record_batch`.
 
         With ``defer_totals_batch_id`` set, the ``total``/``cache_hits``
         counters are NOT incremented here: the caller observes the
@@ -274,14 +281,32 @@ class K8sStreamMetrics:
             )
             .collect()
         )
-        total, misses, nbytes = 0, 0, 0
+        total, nbytes = 0, 0
         labels: list[tuple[str, str, str, str, int]] = []
         for r in per_label:
             lbl = r["_lbl"]
             labels.append((lbl["l0"], lbl["l1"], lbl["l2"], lbl["l3"], r["n"]))
-            misses += r["n"]
             total += r["rows"]
             nbytes += r["nbytes"]
+        return self.record_batch(labels, nbytes, total, defer_totals_batch_id)
+
+    def record_batch(
+        self,
+        labels: list[tuple[str, str, str, str, int]],
+        nbytes: int,
+        total: int,
+        defer_totals_batch_id: int | None = None,
+    ) -> int:
+        """Apply one micro-batch's already-counted increments; returns
+        the miss count.
+
+        ``labels`` holds ``(type, reason, kind, namespace, misses)``
+        per label combination, ``nbytes`` the missed keys' sync bytes
+        and ``total`` the batch's row count (used only without
+        ``defer_totals_batch_id``; see :meth:`observe_batch`).
+        Re-recording a deferred ``batch_id`` overwrites its staged
+        entry (foreachBatch retry idempotence)."""
+        misses = sum(n for *_, n in labels)
         with self._lock:
             if defer_totals_batch_id is None:
                 self._apply_labels_and_bytes(labels, nbytes)
@@ -468,15 +493,9 @@ class K8sStreamMetrics:
             if ops:
                 state_rows, state_bytes = 0, 0
                 for o in ops:
-                    # dedupeWithinWatermark keeps N stores per shuffle
-                    # partition (key store + event-time index), and
-                    # numRowsTotal counts every store's rows — divide
-                    # by stores-per-partition to recover the KEY count
-                    # (the sled-items analog)
-                    parts = int(o.get("numShufflePartitions", 0)) or 1
-                    inst = int(o.get("numStateStoreInstances", 0)) or parts
-                    per_part = max(1, inst // parts)
-                    state_rows += int(o.get("numRowsTotal", 0)) // per_part
+                    # numRowsTotal is the dedup KEY count (the
+                    # sled-items analog)
+                    state_rows += int(o.get("numRowsTotal", 0))
                     state_bytes += int(
                         o.get("stateMemory", o.get("memoryUsedBytes", 0))
                     )

@@ -9,6 +9,8 @@ import threading
 import urllib.request
 from http.server import BaseHTTPRequestHandler, HTTPServer
 
+import pytest
+
 from event_stream_for_k8s_spark.daemon import DaemonConfig, run_daemon
 
 
@@ -346,6 +348,65 @@ def test_daemon_executor_sink_only(spark, tmp_path):
     assert s[("total",)] == 3
     assert s[("cache_hits",)] == 1
     assert s[("cache_misses",)] == 2
+
+
+@pytest.mark.parametrize("mode", ["emit", "sink_dir", "both"])
+def test_daemon_runs_each_batch_once(spark, tmp_path, mode):
+    """Every consumer of a micro-batch (emit loop, metrics, sink_dir
+    write) shares ONE execution of the batch's plan: a second job over
+    the foreachBatch DataFrame would re-read the spool and re-run the
+    dedup state store, which progress shows as two state-store
+    instances per shuffle partition and a doubled kes_emitted count."""
+    import os
+
+    cfg = DaemonConfig(
+        env={
+            "CACHE_TTL": "3600",
+            "CACHE_DB": str(tmp_path / "ck"),
+            "KES_SPOOL": str(tmp_path / "spool"),
+            "METRICS_PORT": "0",
+        }
+    )
+    os.makedirs(cfg.spool_dir, exist_ok=True)
+    n_unique = 40
+    with open(os.path.join(cfg.spool_dir, "watch.jsonl"), "w") as f:
+        for i in range(n_unique + 10):  # the last 10 are redeliveries
+            j = i % n_unique
+            f.write(json.dumps(_event(f"u{j}", 1, "BackOff", f"ns-{j % 3}"))
+                    + "\n")
+    lines: list[str] = []
+    sink_dir = str(tmp_path / "out") if mode != "emit" else None
+    query, metrics, mserver = run_daemon(
+        spark,
+        cfg,
+        emit=lines.append if mode != "sink_dir" else None,
+        sink_dir=sink_dir,
+        available_now=True,
+    )
+    query.awaitTermination()
+    mserver.stop()
+    data = [p for p in query.recentProgress if p.numInputRows > 0]
+    assert data
+    emitted = 0
+    for p in data:
+        d = json.loads(p.json)
+        for op in d["stateOperators"]:
+            assert op["numStateStoreInstances"] == op["numShufflePartitions"]
+        emitted += d["observedMetrics"]["kes_emitted"]["n"]
+    if mode != "sink_dir":
+        assert len(lines) == n_unique
+    if sink_dir is not None:
+        assert spark.read.text(sink_dir).count() == n_unique
+    assert emitted == n_unique
+    metrics.sync_from_query(query)
+    s = metrics.processed.samples
+    assert s[("total",)] == n_unique + 10
+    assert s[("cache_misses",)] == n_unique
+    assert s[("cache_hits",)] == 10
+    assert sum(metrics.events.samples.values()) == n_unique
+    assert metrics.events.samples[("Warning", "BackOff", "Pod", "ns-0")] == 14
+    # the state store holds one row per key
+    assert metrics.size.samples[("items",)] == n_unique
 
 
 def test_in_cluster_https_self_signed_ca(tmp_path):

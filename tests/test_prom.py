@@ -311,3 +311,41 @@ def test_late_observe_overcount_clamped_to_received(spark):
     m2.observe_batch(b, key_col="k", order_cols=("t",),
                      defer_totals_batch_id=7)
     assert m2._hit_overcount == 0
+
+
+def test_record_batch_matches_observe_batch(spark):
+    """A post-dedup batch (unique keys): counting its rows and calling
+    record_batch gives the exposition observe_batch's rollup gives, so
+    the daemon's emit loop can feed the metrics without a Spark job of
+    its own. Re-recording a deferred batch_id (a foreachBatch retry)
+    overwrites the staged entry instead of double-counting."""
+    b = _batch(spark).filter("t = 1")  # one row per key
+    rows = b.collect()
+    labels = [
+        (r["type"] or "-", r["reason"] or "-", r["kind"] or "-",
+         r["namespace"] or "-", 1)
+        for r in rows
+    ]
+    nbytes = sum(len(r["k"].encode()) + 8 for r in rows)
+
+    observed = K8sStreamMetrics()
+    assert observed.observe_batch(b, key_col="k", order_cols=("t",)) == 3
+    recorded = K8sStreamMetrics()
+    assert recorded.record_batch(labels, nbytes, len(rows)) == 3
+    assert recorded.registry.render() == observed.registry.render()
+
+    observed = K8sStreamMetrics()
+    observed.observe_batch(b, key_col="k", order_cols=("t",),
+                           defer_totals_batch_id=4)
+    observed.sync_received(4, 5)
+    recorded = K8sStreamMetrics()
+    recorded.record_batch(labels, nbytes, len(rows), defer_totals_batch_id=4)
+    recorded.record_batch(labels, nbytes, len(rows), defer_totals_batch_id=4)
+    recorded.sync_received(4, 5)
+    assert recorded.registry.render() == observed.registry.render()
+    fam = recorded.processed.samples
+    assert fam[("total",)] == 5
+    assert fam[("cache_misses",)] == 3
+    assert fam[("cache_hits",)] == 2
+    assert sum(recorded.events.samples.values()) == 3
+    assert recorded.sync_bytes.samples[()] == nbytes == 31
